@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.functions.HashExpressions
 
@@ -394,6 +395,12 @@ object Dedup {
   // stream cannot retro-edit), every later host drops it. That is
   // exactly d17's keep-first rule generalized to arrival order.
 
+  /** Bucket count of the st13 segment-df index's `_segdf` and `_docs`
+    * tables: it has no meta table, so the land, the absorbs, the
+    * compaction and the ingest loop's guard all read this one constant.
+    */
+  private[graft] val SegBuckets = 8
+
   /** Land the segment-df index for `docs`: `<tableBase>_segdf`
     * (batch_id, skey, seg, nd) bucketed by skey = xxhash64(seg) —
     * df DELTAS, one row per (batch, segment), summed at probe time —
@@ -411,7 +418,7 @@ object Dedup {
     */
   def landSegDfIndex(spark: SparkSession, docs: DataFrame, idCol: String,
                      textCol: String, window: Int, tableBase: String,
-                     dir: String, nBuckets: Int = 8): Unit = {
+                     dir: String): Unit = {
     val base = docs.select(col(idCol).cast("long").as("doc_id"),
       col(textCol).as("text"))
     val deltas = segmentDocs(base, window)
@@ -420,9 +427,9 @@ object Dedup {
       .select(lit(-1L).as("batch_id"), xxhash64(col("seg")).as("skey"),
         col("seg"), col("nd"))
     graft.sources.Sinks.bucketed(deltas, s"${tableBase}_segdf", "skey",
-      nBuckets, path = Some(s"$dir/segdf"))
+      SegBuckets, path = Some(s"$dir/segdf"))
     graft.sources.Sinks.bucketed(base.select(col("doc_id").as("id")),
-      s"${tableBase}_docs", "id", nBuckets, path = Some(s"$dir/docs"))
+      s"${tableBase}_docs", "id", SegBuckets, path = Some(s"$dir/docs"))
   }
 
   /** One st13 micro-batch: clean the arriving docs against the landed
@@ -443,7 +450,7 @@ object Dedup {
                              idCol: String, textCol: String,
                              tableBase: String, batchId: Long,
                              window: Int, minDf: Int,
-                             outDir: String, nBuckets: Int = 8): Unit = {
+                             outDir: String): Unit = {
     val base = batch.select(col(idCol).cast("long").as("doc_id"),
       col(textCol).as("text"))
     val segs = segmentDocs(base, window).localCheckpoint()
@@ -476,11 +483,11 @@ object Dedup {
     // join-free appends: one job each under AQE-off (absorbMinhashCore)
     withDesc(spark, "cycle: absorb segdf") { withAqeOff(deltas.sparkSession) {
       graft.sources.Sinks.bucketed(deltas, s"${tableBase}_segdf", "skey",
-        nBuckets, mode = SaveMode.Append)
+        SegBuckets, mode = SaveMode.Append)
     } }
     withDesc(spark, "cycle: absorb docs") { withAqeOff(base.sparkSession) {
       graft.sources.Sinks.bucketed(base.select(col("doc_id").as("id")),
-        s"${tableBase}_docs", "id", nBuckets, mode = SaveMode.Append)
+        s"${tableBase}_docs", "id", SegBuckets, mode = SaveMode.Append)
     } }
     spark.catalog.refreshTable(s"${tableBase}_segdf")
     spark.catalog.refreshTable(s"${tableBase}_docs")
@@ -501,18 +508,17 @@ object Dedup {
     * barrier, the same no-concurrent-writer cadence rule as
     * [[compactMinhashIndex]].
     */
-  def compactSegDfIndex(spark: SparkSession, tableBase: String,
-                        nBuckets: Int = 8): Unit = {
+  def compactSegDfIndex(spark: SparkSession, tableBase: String): Unit = {
     // max-per-(batch, seg) BEFORE the cross-batch sum — the probe's own
     // aggregation, so duplicate appends of a replayed batch collapse
     // here exactly as they would at probe time
     val (sb, sa) = compactBucketedTable(spark, s"${tableBase}_segdf", "skey",
-      nBuckets, df => df
+      SegBuckets, df => df
         .groupBy("batch_id", "skey", "seg").agg(max(col("nd")).as("nd"))
         .groupBy("skey", "seg").agg(sum(col("nd")).as("nd"))
         .select(lit(-1L).as("batch_id"), col("skey"), col("seg"), col("nd")))
     val (db, da) = compactBucketedTable(spark, s"${tableBase}_docs", "id",
-      nBuckets, df => df.distinct()) // replayed guard appends collapse too
+      SegBuckets, df => df.distinct()) // replayed guard appends collapse too
     graft.Metrics.set("st13.compact",
       "segdf_files_before" -> sb, "segdf_files_after" -> sa,
       "docs_files_before" -> db, "docs_files_after" -> da)
@@ -1171,19 +1177,12 @@ object Dedup {
         .withColumn("bkey", xxhash64(col("band"), col("bh"))),
       s"${tableBase}_bands", "bkey", nBuckets, path = Some(s"$dir/bands"))
     val nDocs = observedCount(obs, "n")(landedSigs.count())
-    writeIndexMeta(spark, tableBase, s"$dir/meta", n, k, bands, nDocs, nBuckets)
+    val meta = MinhashMeta(n, k, bands, nDocs, nBuckets, s"$dir/meta")
+    writeMeta(spark, tableBase, meta)
     // the land KNOWS the meta it just wrote — returning it saves every
     // ingest loop the per-drain readMinhashMeta head() job + catalog query
-    MinhashMeta(n, k, bands, nDocs, nBuckets, s"$dir/meta")
+    meta
   }
-
-  private def writeIndexMeta(spark: SparkSession, tableBase: String,
-                             metaPath: String, n: Int, k: Int, bands: Int,
-                             nDocs: Long, nBuckets: Int): Unit =
-    spark.createDataFrame(Seq((n, k, bands, nDocs, nBuckets)))
-      .toDF("n", "k", "bands", "n_docs", "n_buckets")
-      .write.mode(SaveMode.Overwrite).option("path", metaPath)
-      .saveAsTable(s"${tableBase}_meta")
 
   /** Absorb an arriving batch into a landed [[landMinhashIndex]] — the
     * continuous-ingest loop: after probing ([[incrementalMinhashPairs]]),
@@ -1204,31 +1203,66 @@ object Dedup {
     val meta = readMinhashMeta(spark, tableBase)
     val bSigs = minhashSignatures(newDocs, idCol, textCol, meta.n, meta.k)
       .localCheckpoint() // one batch-sized pass; both appends + the count reuse it
-    absorbMinhashCore(spark, bSigs, tableBase, meta)
-    ()
+    writeMeta(spark, tableBase, absorbMinhashCore(spark, bSigs, tableBase, meta))
   }
 
-  /** The immutable-per-index slice of a landed MinHash index's `_meta`
-    * row (`n_docs` is the only field that moves, advancing on each
-    * absorb) plus the meta table's resolved location — cacheable across
-    * a per-micro-batch ingest loop so each batch skips the meta
-    * `head()` job and the `DESCRIBE FORMATTED` catalog query.
+  /** A landed index's one-row `_meta` table: `columns` is the row, by
+    * column name, and `metaPath` the table's resolved location. Every
+    * field is frozen at land time except `n_docs`, which advances on
+    * each absorb — advisory state (sizing and staleness, never probe
+    * input), so an ingest loop that is the index's only writer threads
+    * the meta through its cycles and writes it once after the drain.
+    */
+  private[graft] trait IndexMeta {
+    def metaPath: String
+    def columns: Seq[(String, Any)]
+  }
+
+  /** The one `_meta` codec: write `meta` as `<tableBase>_meta`, one row
+    * of non-null Int/Long columns named by `meta.columns`.
+    */
+  private[graft] def writeMeta(spark: SparkSession, tableBase: String,
+                               meta: IndexMeta): Unit = {
+    val schema = StructType(meta.columns.map {
+      case (c, _: Int) => StructField(c, IntegerType, nullable = false)
+      case (c, _)      => StructField(c, LongType, nullable = false)
+    })
+    spark.createDataFrame(
+        java.util.List.of(Row.fromSeq(meta.columns.map(_._2))), schema)
+      .write.mode(SaveMode.Overwrite).option("path", meta.metaPath)
+      .saveAsTable(s"${tableBase}_meta")
+  }
+
+  /** Read `<tableBase>_meta` back: `decode` gets the row (read its
+    * fields by column name) and the table's resolved location.
+    */
+  private[graft] def readMeta[M](spark: SparkSession, tableBase: String)
+                               (decode: (Row, String) => M): M =
+    decode(spark.table(s"${tableBase}_meta").head(),
+      tableLocation(spark, s"${tableBase}_meta"))
+
+  /** A landed MinHash index's `_meta` row (n, k, bands, n_docs,
+    * n_buckets) plus its location — cacheable across a per-micro-batch
+    * ingest loop so each batch skips the meta `head()` job and the
+    * `DESCRIBE FORMATTED` catalog query.
     */
   private[graft] final case class MinhashMeta(n: Int, k: Int, bands: Int,
                                               nDocs: Long, nBuckets: Int,
-                                              metaPath: String) {
+                                              metaPath: String) extends IndexMeta {
     def bandRowCount: Int = k / bands
+    def columns: Seq[(String, Any)] = Seq("n" -> n, "k" -> k, "bands" -> bands,
+      "n_docs" -> nDocs, "n_buckets" -> nBuckets)
   }
 
   private[graft] def readMinhashMeta(spark: SparkSession,
-                                     tableBase: String): MinhashMeta = {
-    val m = spark.table(s"${tableBase}_meta").head()
-    MinhashMeta(m.getInt(0), m.getInt(1), m.getInt(2), m.getLong(3), m.getInt(4),
-      tableLocation(spark, s"${tableBase}_meta"))
-  }
+                                     tableBase: String): MinhashMeta =
+    readMeta(spark, tableBase)((r, loc) => MinhashMeta(r.getAs[Int]("n"),
+      r.getAs[Int]("k"), r.getAs[Int]("bands"), r.getAs[Long]("n_docs"),
+      r.getAs[Int]("n_buckets"), loc))
 
   /** Append precomputed batch signatures (and their band rows) to the
-    * index; returns the advanced meta for the caller's next cycle.
+    * index; returns the advanced meta, which the caller writes (the
+    * standalone absorb at once, an ingest loop after its drain).
     *
     * Write order is a crash-safety contract: `_bands` BEFORE `_sigs`.
     * The st9 redelivery guard anti-joins arrivals against `_sigs` ids,
@@ -1242,8 +1276,7 @@ object Dedup {
     */
   private def absorbMinhashCore(spark: SparkSession, bSigs: DataFrame,
                                 tableBase: String,
-                                meta: MinhashMeta,
-                                deferMeta: Boolean = false): MinhashMeta = {
+                                meta: MinhashMeta): MinhashMeta = {
     // join-free append plans: AQE off folds each append's exchange+write
     // into ONE job (see withAqeOff; the explicit repartition pins the
     // partition count either way, so the file layout is identical)
@@ -1264,17 +1297,6 @@ object Dedup {
     } }
     val advanced =
       meta.copy(nDocs = meta.nDocs + observedCount(obs, "n")(bSigs.count()))
-    // deferMeta: a per-micro-batch ingest loop that threads `cachedMeta`
-    // (and is the index's only writer, which that contract demands)
-    // skips the per-cycle 1-row meta rewrite — n_docs is advisory state
-    // (staleness sizing, never probe input), so the loop persists it
-    // ONCE after the drain instead of once per batch. A crash between
-    // cycles leaves meta's n_docs at the land-time value with the
-    // absorbed rows present — the same understatement a crash between
-    // the sigs append and the meta write already produced today.
-    if (!deferMeta)
-      writeIndexMeta(spark, tableBase, meta.metaPath, meta.n, meta.k, meta.bands,
-        advanced.nDocs, meta.nBuckets)
     // The bucketed append refreshes by PATH only; a reader that already
     // resolved these tables holds an identifier-keyed cached relation
     // whose file listing predates this append (observed: a streaming
@@ -1296,14 +1318,6 @@ object Dedup {
   private[graft] def observedCount(obs: org.apache.spark.sql.Observation,
                                    key: String)(recount: => Long): Long =
     obs.get.get(key).map(_.asInstanceOf[Long]).getOrElse(recount)
-
-  /** Persist a threaded [[MinhashMeta]] once — the deferMeta loops'
-    * end-of-drain write (see [[absorbMinhashCore]]).
-    */
-  private[graft] def persistMinhashMeta(spark: SparkSession, tableBase: String,
-                                        meta: MinhashMeta): Unit =
-    writeIndexMeta(spark, tableBase, meta.metaPath, meta.n, meta.k, meta.bands,
-      meta.nDocs, meta.nBuckets)
 
   /** Catalog location of `table` (the URI string Spark records). */
   private[operators] def tableLocation(spark: SparkSession, table: String): String =
@@ -1389,6 +1403,24 @@ object Dedup {
     (before, parquetFileCount(newLoc))
   }
 
+  /** Compact the listed (suffix, bucket column) tables of a landed
+    * index — the one body behind [[compactMinhashIndex]],
+    * [[compactSemanticIndex]] and [[Similarity.compactIvfPqIndex]]:
+    * each table goes through [[compactBucketedTable]] at the bucket
+    * count its `_meta` row records, and Metrics `tag` reports
+    * `<suffix>_files_before` / `_files_after` per table.
+    */
+  private[operators] def compactIndex(spark: SparkSession, tableBase: String,
+                                      tag: String)(tables: (String, String)*): Unit = {
+    val nBuckets = spark.table(s"${tableBase}_meta").head().getAs[Int]("n_buckets")
+    val counts = tables.flatMap { case (sfx, bcol) =>
+      val (before, after) =
+        compactBucketedTable(spark, s"${tableBase}_$sfx", bcol, nBuckets)
+      Seq(s"${sfx}_files_before" -> before, s"${sfx}_files_after" -> after)
+    }
+    graft.Metrics.set(tag, counts: _*)
+  }
+
   /** Compact a landed [[landMinhashIndex]] back to one file per bucket.
     *
     * Every [[absorbMinhashBatch]] appends ~one new file per touched
@@ -1400,15 +1432,8 @@ object Dedup {
     * changes. Cadence is the operator's choice; the `d11.compact`
     * Metrics entry reports files before/after per table.
     */
-  def compactMinhashIndex(spark: SparkSession, tableBase: String): Unit = {
-    val nBuckets = spark.table(s"${tableBase}_meta").head().getInt(4)
-    val counts = Seq(("sigs", "id"), ("bands", "bkey")).flatMap { case (sfx, bcol) =>
-      val (before, after) =
-        compactBucketedTable(spark, s"${tableBase}_$sfx", bcol, nBuckets)
-      Seq(s"${sfx}_files_before" -> before, s"${sfx}_files_after" -> after)
-    }
-    graft.Metrics.set("d11.compact", counts: _*)
-  }
+  def compactMinhashIndex(spark: SparkSession, tableBase: String): Unit =
+    compactIndex(spark, tableBase, "d11.compact")("sigs" -> "id", "bands" -> "bkey")
 
   /** Near-dup pairs INVOLVING an arriving batch, probed against a landed
     * [[landMinhashIndex]] — bit-identical to running [[minhashLshPairs]]
@@ -1534,29 +1559,6 @@ object Dedup {
   private[operators] def pruneKeyCap(nBuckets: Int): Int =
     math.min(8192, math.ceil(nBuckets * math.log(4.0)).toInt)
 
-  /** The batch-proportional redelivery guard shared by the landed-index
-    * absorbs and the streaming ingest loops: drop every `base` row
-    * whose `id` already exists in the id-BUCKETED `landedTable`. The
-    * batch's distinct ids (a batch-sized, bounded collect) become an
-    * InSet filter on the table's bucket column, so Spark's bucket
-    * pruning skips every index file the batch's ids cannot hash into —
-    * guard IO stays flat in corpus size at fixed batch size. Capped by
-    * [[pruneKeyCap]] (the d11 break-even: past ~nBuckets·ln4
-    * keys the expected file skip is under 25% while the InSet literal
-    * taxes every Catalyst transform) — past the cap the anti-join runs
-    * against the unfiltered id column, which is still a single-column
-    * pruned scan. The prune is a file-skip device, never a correctness
-    * ingredient: a landed row with an id IN the batch always survives
-    * the InSet, so the anti-join result is identical either way.
-    *
-    * `idCol` names the BATCH side's key column; the landed index
-    * tables' bucket column is always `id`.
-    */
-
-  /** Label the jobs `f` submits (guide §1.5) — thread-local, restored
-    * after; purely diagnostic (JobProf/UI attribution for the
-    * sum-of-small-jobs ingest cycles).
-    */
   /** Run `f` (an action over a JOIN-FREE plan — scan/project/repartition/
     * aggregate, no strategy decisions for AQE to make) with adaptive
     * execution off: AQE materializes every exchange as its own Spark job,
@@ -1576,6 +1578,10 @@ object Dedup {
     try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  /** Label the jobs `f` submits (guide §1.5) — thread-local, restored
+    * after; purely diagnostic (JobProf/UI attribution for the
+    * sum-of-small-jobs ingest cycles).
+    */
   private[graft] def withDesc[T](spark: SparkSession, d: String)(f: => T): T = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
@@ -1583,6 +1589,24 @@ object Dedup {
     try f finally sc.setJobDescription(prev)
   }
 
+  /** The batch-proportional redelivery guard shared by the landed-index
+    * absorbs and the streaming ingest loops: drop every `base` row
+    * whose `id` already exists in the id-BUCKETED `landedTable`. The
+    * batch's distinct ids (a batch-sized, bounded collect) become an
+    * InSet filter on the table's bucket column, so Spark's bucket
+    * pruning skips every index file the batch's ids cannot hash into —
+    * guard IO stays flat in corpus size at fixed batch size. Capped by
+    * [[pruneKeyCap]] (the d11 break-even: past ~nBuckets·ln4
+    * keys the expected file skip is under 25% while the InSet literal
+    * taxes every Catalyst transform) — past the cap the anti-join runs
+    * against the unfiltered id column, which is still a single-column
+    * pruned scan. The prune is a file-skip device, never a correctness
+    * ingredient: a landed row with an id IN the batch always survives
+    * the InSet, so the anti-join result is identical either way.
+    *
+    * `idCol` names the BATCH side's key column; the landed index
+    * tables' bucket column is always `id`.
+    */
   private[graft] def prunedIdGuard(spark: SparkSession, base: DataFrame,
                                    landedTable: String, nBuckets: Int,
                                    tag: String, idCol: String = "id"): DataFrame = {
@@ -1681,22 +1705,17 @@ object Dedup {
     * Ordering is the correctness heart: the pair spool append
     * MATERIALIZES the probe before the absorb appends the batch to the
     * index — absorbing first would let the probe's lazily-listed index
-    * scan see the batch's own rows and emit self-pairs. `cachedMeta`
-    * (from a previous cycle's return) skips the per-batch meta `head()`
-    * and `DESCRIBE FORMATTED`; safe whenever this loop is the index's
-    * only writer, which the disjoint-ids contract already demands.
-    * The spooled sliver is repartitioned to one file per batch —
-    * `repartition`, not `coalesce`, so the collapse happens in its own
-    * batch-sized stage instead of de-parallelizing the probe's scan
-    * stage above it.
+    * scan see the batch's own rows and emit self-pairs. `meta` is the
+    * loop's threaded index meta (the land's, then each cycle's return),
+    * so a cycle pays no meta `head()`, `DESCRIBE FORMATTED` or meta
+    * write — the loop writes the meta once after its drain; safe
+    * whenever this loop is the index's only writer, which the
+    * disjoint-ids contract already demands.
     */
   def probeAbsorbMinhashBatch(spark: SparkSession, newDocs: DataFrame,
                               idCol: String, textCol: String,
                               tableBase: String, threshold: Double,
-                              pairsDir: String,
-                              cachedMeta: Option[MinhashMeta] = None,
-                              deferMeta: Boolean = false): MinhashMeta = {
-    val meta = cachedMeta.getOrElse(readMinhashMeta(spark, tableBase))
+                              pairsDir: String, meta: MinhashMeta): MinhashMeta = {
     val bSigs = withDesc(spark, "cycle: batch signatures") {
       minhashSignatures(newDocs, idCol, textCol, meta.n, meta.k)
         .localCheckpoint()
@@ -1709,7 +1728,7 @@ object Dedup {
       probeMinhashCore(spark, bSigs, tableBase, meta, threshold, broadcastBatch = true)
         .write.mode(SaveMode.Append).parquet(pairsDir)
     }
-    absorbMinhashCore(spark, bSigs, tableBase, meta, deferMeta)
+    absorbMinhashCore(spark, bSigs, tableBase, meta)
   }
 
   /** Keep/drop classification of an arriving batch against a landed
@@ -1760,10 +1779,7 @@ object Dedup {
   def classifyAbsorbMinhashBatch(spark: SparkSession, newDocs: DataFrame,
                                  idCol: String, textCol: String,
                                  tableBase: String, threshold: Double,
-                                 classDir: String,
-                                 cachedMeta: Option[MinhashMeta] = None,
-                                 deferMeta: Boolean = false): MinhashMeta = {
-    val meta = cachedMeta.getOrElse(readMinhashMeta(spark, tableBase))
+                                 classDir: String, meta: MinhashMeta): MinhashMeta = {
     val bSigs = minhashSignatures(newDocs, idCol, textCol, meta.n, meta.k)
       .localCheckpoint()
     val pairs = probeMinhashCore(spark, bSigs, tableBase, meta, threshold,
@@ -1777,7 +1793,7 @@ object Dedup {
           pairs, "doc_id")
         .write.mode(SaveMode.Append).parquet(classDir)
     }
-    absorbMinhashCore(spark, bSigs, tableBase, meta, deferMeta)
+    absorbMinhashCore(spark, bSigs, tableBase, meta)
   }
 
   /** The earlier-neighbor fold shared by [[incrementalSurvivors]] and
@@ -1863,18 +1879,10 @@ object Dedup {
     // ivfCellsFor(nDocs) clamps at the corpus size, so the sample can
     // hold fewer rows than the formula on tiny corpora — record the
     // formula value, the thing staleness is measured against
-    writeSemanticMeta(spark, tableBase, s"$dir/meta", nDocs, nBuckets,
-      ivfCellsFor(nDocs))
-    SemanticMeta(nDocs, nBuckets, ivfCellsFor(nDocs), s"$dir/meta")
+    val meta = SemanticMeta(nDocs, nBuckets, ivfCellsFor(nDocs), s"$dir/meta")
+    writeMeta(spark, tableBase, meta)
+    meta
   }
-
-  private def writeSemanticMeta(spark: SparkSession, tableBase: String,
-                                metaPath: String, nDocs: Long,
-                                nBuckets: Int, nCents: Int): Unit =
-    spark.createDataFrame(Seq((nDocs, nBuckets, nCents)))
-      .toDF("n_docs", "n_buckets", "n_cents")
-      .write.mode(SaveMode.Overwrite).option("path", metaPath)
-      .saveAsTable(s"${tableBase}_meta")
 
   /** The quantizer-staleness advisory (the missing half of the frozen-
     * quantizer versioning contract): absorbs grow `n_docs` while the
@@ -2023,32 +2031,35 @@ object Dedup {
     val cents = spark.table(s"${tableBase}_cents")
     val bBase = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
       .localCheckpoint() // one batch-sized pass; both appends + count reuse it
-    absorbSemanticCore(spark, bBase, assignCells(bBase, cents), tableBase, meta)
-    ()
+    writeMeta(spark, tableBase,
+      absorbSemanticCore(spark, bBase, assignCells(bBase, cents), tableBase, meta))
   }
 
-  /** The cacheable slice of a landed semantic index's `_meta` row plus
-    * the meta table's resolved location — the d13 twin of
-    * [[MinhashMeta]] (`n_docs` is the only moving field).
+  /** A landed semantic index's `_meta` row (n_docs, n_buckets,
+    * n_cents) plus its location — the d13 twin of [[MinhashMeta]].
     */
   private[graft] final case class SemanticMeta(nDocs: Long, nBuckets: Int,
                                                nCents: Int, metaPath: String)
-
-  private[graft] def readSemanticMeta(spark: SparkSession,
-                                      tableBase: String): SemanticMeta = {
-    val m = spark.table(s"${tableBase}_meta").head()
-    // back-compat: an index landed before n_cents joined the meta row
-    // (r18) has a 2-field row — landed state is durable, so absorb/probe
-    // must still read it; the frozen-centroid count IS the _cents table's
-    // cardinality (dim-scale, one count) whenever the meta predates it
-    val nCents = if (m.length >= 3) m.getInt(2)
-      else spark.table(s"${tableBase}_cents").count().toInt
-    SemanticMeta(m.getLong(0), m.getInt(1), nCents,
-      tableLocation(spark, s"${tableBase}_meta"))
+      extends IndexMeta {
+    def columns: Seq[(String, Any)] =
+      Seq("n_docs" -> nDocs, "n_buckets" -> nBuckets, "n_cents" -> nCents)
   }
 
+  private[graft] def readSemanticMeta(spark: SparkSession,
+                                      tableBase: String): SemanticMeta =
+    readMeta(spark, tableBase) { (r, loc) =>
+      // back-compat: an index landed before n_cents joined the meta row
+      // (r18) has a 2-field row — landed state is durable, so absorb/probe
+      // must still read it; the frozen-centroid count IS the _cents table's
+      // cardinality (dim-scale, one count) whenever the meta predates it
+      val nCents = if (r.schema.fieldNames.contains("n_cents")) r.getAs[Int]("n_cents")
+        else spark.table(s"${tableBase}_cents").count().toInt
+      SemanticMeta(r.getAs[Long]("n_docs"), r.getAs[Int]("n_buckets"), nCents, loc)
+    }
+
   /** Append a precomputed batch (vectors + their frozen-centroid
-    * assignment) to the semantic index; returns the advanced meta.
+    * assignment) to the semantic index; returns the advanced meta, which
+    * the caller writes (see [[absorbMinhashCore]]).
     *
     * Write order is the d13 crash contract, mirroring
     * [[absorbMinhashCore]]: `_assign` BEFORE `_vecs`, because the st10
@@ -2059,16 +2070,13 @@ object Dedup {
     */
   private def absorbSemanticCore(spark: SparkSession, bBase: DataFrame,
                                  bAssign: DataFrame, tableBase: String,
-                                 meta: SemanticMeta,
-                                 deferMeta: Boolean = false): SemanticMeta = {
+                                 meta: SemanticMeta): SemanticMeta = {
     // join-free appends: one job each under AQE-off (absorbMinhashCore)
     withDesc(spark, "cycle: absorb assign") { withAqeOff(bAssign.sparkSession) {
       graft.sources.Sinks.bucketed(bAssign,
         s"${tableBase}_assign", "cid", meta.nBuckets, mode = SaveMode.Append)
     } }
-    // batch count rides the append (no separate count() job per absorb);
-    // deferMeta: see absorbMinhashCore — the per-cycle 1-row meta
-    // rewrite is skipped by loops that thread cachedMeta and persist once
+    // batch count rides the append (no separate count() job per absorb)
     val obs = org.apache.spark.sql.Observation()
     withDesc(spark, "cycle: absorb vecs") { withAqeOff(bBase.sparkSession) {
       graft.sources.Sinks.bucketed(bBase.observe(obs, count(lit(1)).as("n")),
@@ -2076,46 +2084,29 @@ object Dedup {
     } }
     val advanced =
       meta.copy(nDocs = meta.nDocs + observedCount(obs, "n")(bBase.count()))
-    if (!deferMeta)
-      writeSemanticMeta(spark, tableBase, meta.metaPath, advanced.nDocs,
-        meta.nBuckets, meta.nCents)
     staleAdvisory("d13", advanced.nDocs, meta.nCents)
     spark.catalog.refreshTable(s"${tableBase}_assign")
     spark.catalog.refreshTable(s"${tableBase}_vecs")
     advanced
   }
 
-  /** Persist a threaded [[SemanticMeta]] once — the deferMeta loops'
-    * end-of-drain write (see [[absorbMinhashCore]]).
-    */
-  private[graft] def persistSemanticMeta(spark: SparkSession, tableBase: String,
-                                         meta: SemanticMeta): Unit =
-    writeSemanticMeta(spark, tableBase, meta.metaPath, meta.nDocs,
-      meta.nBuckets, meta.nCents)
-
   /** One full semantic ingest cycle — assign once, probe, spool the
     * pairs, absorb — the st10 per-micro-batch loop body and the d13
     * twin of [[probeAbsorbMinhashBatch]] (see there for the
-    * materialize-before-absorb ordering and the cached-meta contract).
+    * materialize-before-absorb ordering and the threaded-meta contract).
+    * `cents` is the loop's one driver-side snapshot of the FROZEN
+    * centroid table ([[Similarity.localTable]]), so each cycle's
+    * assignment broadcast builds without a Spark job (exact by the
+    * frozen-at-land contract). The loop's guarded batch re-evaluates
+    * for free (it is the arrival file), so the (id, v) projection needs
+    * no checkpoint of its own.
     */
   def probeAbsorbSemanticBatch(spark: SparkSession, newEmbs: DataFrame,
                                idCol: String, vecCol: String,
                                tableBase: String, threshold: Double,
-                               pairsDir: String,
-                               cachedMeta: Option[SemanticMeta] = None,
-                               preMaterialized: Boolean = false,
-                               deferMeta: Boolean = false,
-                               cachedCents: Option[DataFrame] = None): SemanticMeta = {
-    val meta = cachedMeta.getOrElse(readSemanticMeta(spark, tableBase))
-    // cachedCents: the loop threads one localTable snapshot of the
-    // FROZEN centroid table, so each cycle's assignment broadcast
-    // builds without a Spark job (exact by the frozen-at-land contract)
-    val cents = cachedCents.getOrElse(spark.table(s"${tableBase}_cents"))
-    // preMaterialized: the stream loops' guarded batch re-evaluates for
-    // free (it is the arrival file), so the (id, v) projection needs no
-    // checkpoint of its own
-    val bBase0 = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val bBase = if (preMaterialized) bBase0 else bBase0.localCheckpoint()
+                               pairsDir: String, meta: SemanticMeta,
+                               cents: DataFrame): SemanticMeta = {
+    val bBase = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
     val (bAssign, bCids) = batchAssignLocal(spark, bBase, cents)
     // no repartition(1): see probeAbsorbMinhashBatch
     withDesc(spark, "cycle: probe+spool") {
@@ -2123,7 +2114,7 @@ object Dedup {
           threshold, broadcastBatch = true)
         .write.mode(SaveMode.Append).parquet(pairsDir)
     }
-    absorbSemanticCore(spark, bBase, bAssign, tableBase, meta, deferMeta)
+    absorbSemanticCore(spark, bBase, bAssign, tableBase, meta)
   }
 
   /** The per-micro-batch (id → cell) assignment as a driver-side
@@ -2147,21 +2138,15 @@ object Dedup {
     * decision, spool the per-vector verdicts, absorb — the st12
     * per-micro-batch loop body (st12 : st10 :: st11 : st9; see
     * [[classifyAbsorbMinhashBatch]] for the arrival-ordered earlier
-    * rule and the materialize-before-absorb contract).
+    * rule and the materialize-before-absorb contract, and
+    * [[probeAbsorbSemanticBatch]] for `meta` and `cents`).
     */
   def classifyAbsorbSemanticBatch(spark: SparkSession, newEmbs: DataFrame,
                                   idCol: String, vecCol: String,
                                   tableBase: String, threshold: Double,
-                                  classDir: String,
-                                  cachedMeta: Option[SemanticMeta] = None,
-                                  preMaterialized: Boolean = false,
-                                  deferMeta: Boolean = false,
-                                  cachedCents: Option[DataFrame] = None): SemanticMeta = {
-    val meta = cachedMeta.getOrElse(readSemanticMeta(spark, tableBase))
-    val cents = cachedCents.getOrElse(spark.table(s"${tableBase}_cents"))
-    // see probeAbsorbSemanticBatch on preMaterialized / cachedCents
-    val bBase0 = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val bBase = if (preMaterialized) bBase0 else bBase0.localCheckpoint()
+                                  classDir: String, meta: SemanticMeta,
+                                  cents: DataFrame): SemanticMeta = {
+    val bBase = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
     val (bAssign, bCids) = batchAssignLocal(spark, bBase, cents)
     val pairs = probeSemanticCore(spark, bBase, bAssign, bCids, tableBase,
       meta.nBuckets, threshold, broadcastBatch = true)
@@ -2170,7 +2155,7 @@ object Dedup {
       earliestNeighborFold(bBase.select(col("id").as("vec_id")), pairs, "vec_id")
         .write.mode(SaveMode.Append).parquet(classDir)
     }
-    absorbSemanticCore(spark, bBase, bAssign, tableBase, meta, deferMeta)
+    absorbSemanticCore(spark, bBase, bAssign, tableBase, meta)
   }
 
   /** Compact a landed [[landSemanticIndex]] back to one file per bucket
@@ -2184,15 +2169,8 @@ object Dedup {
     * are bit-identical before and after (spec-pinned); the
     * `d13.compact` Metrics entry reports files before/after per table.
     */
-  def compactSemanticIndex(spark: SparkSession, tableBase: String): Unit = {
-    val nBuckets = spark.table(s"${tableBase}_meta").head().getInt(1)
-    val counts = Seq(("assign", "cid"), ("vecs", "id")).flatMap { case (sfx, bcol) =>
-      val (before, after) =
-        compactBucketedTable(spark, s"${tableBase}_$sfx", bcol, nBuckets)
-      Seq(s"${sfx}_files_before" -> before, s"${sfx}_files_after" -> after)
-    }
-    graft.Metrics.set("d13.compact", counts: _*)
-  }
+  def compactSemanticIndex(spark: SparkSession, tableBase: String): Unit =
+    compactIndex(spark, tableBase, "d13.compact")("assign" -> "cid", "vecs" -> "id")
 
   /** Land the d1 exact-dedup state — (content_sha, keep_id, n_copies),
     * bucketed by the digest — as the `<tableBase>_sha` table under

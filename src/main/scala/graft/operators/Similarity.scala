@@ -513,28 +513,22 @@ object Similarity {
   // over corpus ∪ absorbed (the a10 DuckDB oracle), independent of how
   // arrivals were chunked (spec-pinned).
 
-  /** The cacheable slice of a landed IVF-PQ index's `_meta` row plus the
-    * meta table's resolved location — `n_docs` is the only moving field
-    * (advances on each absorb); everything else is frozen at land time.
+  /** A landed IVF-PQ index's `_meta` row (n_docs, n_cents, m, k_codes,
+    * n_buckets) plus its location — the a10 twin of
+    * [[Dedup.MinhashMeta]] (`n_docs` is the only moving field).
     */
   private[graft] final case class IvfPqMeta(nDocs: Long, nCents: Int, m: Int,
                                             kCodes: Int, nBuckets: Int,
-                                            metaPath: String)
-
-  private def writeIvfPqMeta(spark: SparkSession, tableBase: String,
-                             metaPath: String, nDocs: Long, nCents: Int,
-                             m: Int, kCodes: Int, nBuckets: Int): Unit =
-    spark.createDataFrame(Seq((nDocs, nCents, m, kCodes, nBuckets)))
-      .toDF("n_docs", "n_cents", "m", "k_codes", "n_buckets")
-      .write.mode(SaveMode.Overwrite).option("path", metaPath)
-      .saveAsTable(s"${tableBase}_meta")
+                                            metaPath: String) extends Dedup.IndexMeta {
+    def columns: Seq[(String, Any)] = Seq("n_docs" -> nDocs, "n_cents" -> nCents,
+      "m" -> m, "k_codes" -> kCodes, "n_buckets" -> nBuckets)
+  }
 
   private[graft] def readIvfPqMeta(spark: SparkSession,
-                                   tableBase: String): IvfPqMeta = {
-    val r = spark.table(s"${tableBase}_meta").head()
-    IvfPqMeta(r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4),
-      Dedup.tableLocation(spark, s"${tableBase}_meta"))
-  }
+                                   tableBase: String): IvfPqMeta =
+    Dedup.readMeta(spark, tableBase)((r, loc) => IvfPqMeta(r.getAs[Long]("n_docs"),
+      r.getAs[Int]("n_cents"), r.getAs[Int]("m"), r.getAs[Int]("k_codes"),
+      r.getAs[Int]("n_buckets"), loc))
 
   /** A (small, frozen) catalog table materialized as a driver-side
     * LocalRelation: broadcasts of it build from the in-memory rows
@@ -659,11 +653,11 @@ object Similarity {
       encodeWithCells(spark.table(s"${tableBase}_cents"),
         spark.table(s"${tableBase}_cb"), base, m),
       s"${tableBase}_codes", "cid", nBuckets, path = Some(s"$dir/codes"))
-    writeIvfPqMeta(spark, tableBase, s"$dir/meta", nDocs, nCentroids, m,
-      kCodes, nBuckets)
+    val meta = IvfPqMeta(nDocs, nCentroids, m, kCodes, nBuckets, s"$dir/meta")
+    Dedup.writeMeta(spark, tableBase, meta)
     // the land KNOWS the meta it just wrote (saves the st14 loop the
     // per-drain readIvfPqMeta head() job + catalog query)
-    IvfPqMeta(nDocs, nCentroids, m, kCodes, nBuckets, s"$dir/meta")
+    meta
   }
 
   /** ADC top-k of `queries` against a landed [[landIvfPqIndex]] — the
@@ -692,18 +686,25 @@ object Similarity {
     * a10 DuckDB oracle).
     */
   def ivfPqProbe(spark: SparkSession, queries: DataFrame, idCol: String,
-                 vecCol: String, tableBase: String, k: Int, nProbe: Int,
-                 cachedMeta: Option[IvfPqMeta] = None,
-                 cachedQuantizers: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    val meta = cachedMeta.getOrElse(readIvfPqMeta(spark, tableBase))
-    // cachedQuantizers: a per-micro-batch loop threads one localTable
-    // snapshot of the FROZEN (cents, cb) tables so each cycle's
-    // broadcasts build without a Spark job — exact by the frozen-at-land
-    // contract (same rationale as cachedMeta)
-    val cents = cachedQuantizers.map(_._1)
-      .getOrElse(spark.table(s"${tableBase}_cents"))
-    val cb = broadcast(cachedQuantizers.map(_._2)
-      .getOrElse(spark.table(s"${tableBase}_cb")))
+                 vecCol: String, tableBase: String, k: Int, nProbe: Int): DataFrame =
+    ivfPqProbeWith(spark, queries, idCol, vecCol, tableBase, k, nProbe,
+      readIvfPqMeta(spark, tableBase), landedQuantizers(spark, tableBase))
+
+  /** The landed (`_cents`, `_cb`) quantizer tables of `tableBase`. */
+  private def landedQuantizers(spark: SparkSession,
+                               tableBase: String): (DataFrame, DataFrame) =
+    (spark.table(s"${tableBase}_cents"), spark.table(s"${tableBase}_cb"))
+
+  /** [[ivfPqProbe]] against a given meta and (cents, cb) quantizer — the
+    * landed tables, or an ingest loop's one [[localTable]] snapshot of
+    * them, whose broadcasts then build without a Spark job each cycle
+    * (exact by the frozen-at-land contract).
+    */
+  private def ivfPqProbeWith(spark: SparkSession, queries: DataFrame,
+                             idCol: String, vecCol: String, tableBase: String,
+                             k: Int, nProbe: Int, meta: IvfPqMeta,
+                             quantizers: (DataFrame, DataFrame)): DataFrame = {
+    val (cents, cb) = (quantizers._1, broadcast(quantizers._2))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     // LOCAL RELATION, not localCheckpoint: probes is (queries·nProbe)
     // two-long-column rows — broadcast-sized by construction (the
@@ -768,16 +769,15 @@ object Similarity {
     */
   def ivfPqProbeRefine(spark: SparkSession, queries: DataFrame, idCol: String,
                        vecCol: String, tableBase: String, k: Int, nProbe: Int,
-                       refine: Int = 4,
-                       cachedMeta: Option[IvfPqMeta] = None): DataFrame = {
-    val meta = cachedMeta.getOrElse(readIvfPqMeta(spark, tableBase))
+                       refine: Int = 4): DataFrame = {
+    val meta = readIvfPqMeta(spark, tableBase)
     // LOCAL RELATION, not localCheckpoint (the ivfPqProbe probes
     // rationale): the pool is (queries·refine·k) two-long-column rows —
     // broadcast-sized by construction — so one collect feeds the
     // distinct-id prune driver-side (no distinct+limit jobs) and the
     // re-rank join's broadcast builds job-free from the local rows
-    val poolPlan = ivfPqProbe(spark, queries, idCol, vecCol, tableBase,
-        k * refine, nProbe, cachedMeta = Some(meta))
+    val poolPlan = ivfPqProbeWith(spark, queries, idCol, vecCol, tableBase,
+        k * refine, nProbe, meta, landedQuantizers(spark, tableBase))
       .select("query_id", "neighbor_id")
     val poolRows = Dedup.withDesc(spark, "a13: adc pool") {
       poolPlan.collect()
@@ -827,40 +827,36 @@ object Similarity {
     * sizing 2×, a re-land is due.
     */
   def absorbIvfPqBatch(spark: SparkSession, newEmbs: DataFrame,
-                       idCol: String, vecCol: String, tableBase: String,
-                       cachedMeta: Option[IvfPqMeta] = None,
-                       preMaterialized: Boolean = false,
-                       callerGuarded: Boolean = false,
-                       deferMeta: Boolean = false,
-                       cachedQuantizers: Option[(DataFrame, DataFrame)] = None): IvfPqMeta = {
-    val meta = cachedMeta.getOrElse(readIvfPqMeta(spark, tableBase))
-    // preMaterialized: the st14 loop already localCheckpointed the
-    // guarded batch, so the projection re-evaluates for free and the
-    // fresh checkpoint below bounds everything downstream anyway
-    val base0 = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val base = if (preMaterialized) base0
-      else base0.localCheckpoint() // the guard (or encode) reads it twice
-    // callerGuarded: the st14 loop's guard anti-join already dropped
-    // landed ids (it must — a replay may not re-PROBE either), so the
-    // internal guard would re-scan the same files per batch for
-    // nothing; standalone callers keep it ON
-    val fresh = if (callerGuarded) base
-      else Dedup.prunedIdGuard(spark, base, s"${tableBase}_vecs",
-        meta.nBuckets, "a10.guard").localCheckpoint()
+                       idCol: String, vecCol: String, tableBase: String): IvfPqMeta = {
+    val meta = readIvfPqMeta(spark, tableBase)
+    val base = newEmbs.select(col(idCol).as("id"), col(vecCol).as("v"))
+      .localCheckpoint() // the guard reads it twice
+    val fresh = Dedup.prunedIdGuard(spark, base, s"${tableBase}_vecs",
+      meta.nBuckets, "a10.guard").localCheckpoint()
+    val advanced = absorbIvfPqCore(spark, fresh, tableBase, meta,
+      landedQuantizers(spark, tableBase))
+    Dedup.writeMeta(spark, tableBase, advanced)
+    advanced
+  }
+
+  /** Encode already-guarded `(id, v)` rows against the frozen
+    * (cents, cb) quantizer and append them: `_codes` BEFORE `_vecs`, so
+    * the redelivery guard's key table commits last (the
+    * [[Dedup.absorbMinhashCore]] crash contract). Returns the advanced
+    * meta, which the caller writes.
+    */
+  private def absorbIvfPqCore(spark: SparkSession, fresh: DataFrame,
+                              tableBase: String, meta: IvfPqMeta,
+                              quantizers: (DataFrame, DataFrame)): IvfPqMeta = {
     // absorb input is batch-sized by contract: the encode's joins are
     // hint-pinned (encodeWithCellsBatch), so the append runs AQE-off as
     // one job instead of one job per AQE stage
-    val enc = encodeWithCellsBatch(
-      cachedQuantizers.map(_._1).getOrElse(spark.table(s"${tableBase}_cents")),
-      cachedQuantizers.map(_._2).getOrElse(spark.table(s"${tableBase}_cb")),
-      fresh, meta.m)
+    val enc = encodeWithCellsBatch(quantizers._1, quantizers._2, fresh, meta.m)
     Dedup.withDesc(spark, "cycle: absorb codes") { Dedup.withAqeOff(fresh.sparkSession) {
       graft.sources.Sinks.bucketed(enc,
         s"${tableBase}_codes", "cid", meta.nBuckets, mode = SaveMode.Append)
     } }
-    // batch count rides the append (no separate count() job per absorb);
-    // deferMeta: see Dedup.absorbMinhashCore — per-micro-batch loops
-    // that thread cachedMeta persist the 1-row meta once after the drain
+    // batch count rides the append (no separate count() job per absorb)
     val obs = org.apache.spark.sql.Observation()
     // join-free append: one job under AQE-off (Dedup.absorbMinhashCore);
     // the codes append above keeps AQE — encodeWithCells has joins
@@ -871,22 +867,11 @@ object Similarity {
     } }
     val advanced =
       meta.copy(nDocs = meta.nDocs + Dedup.observedCount(obs, "n")(fresh.count()))
-    if (!deferMeta)
-      writeIvfPqMeta(spark, tableBase, meta.metaPath, advanced.nDocs,
-        meta.nCents, meta.m, meta.kCodes, meta.nBuckets)
     Dedup.staleAdvisory("a10", advanced.nDocs, meta.nCents)
     spark.catalog.refreshTable(s"${tableBase}_codes")
     spark.catalog.refreshTable(s"${tableBase}_vecs")
     advanced
   }
-
-  /** Persist a threaded [[IvfPqMeta]] once — the deferMeta loops'
-    * end-of-drain write (see [[Dedup.absorbMinhashCore]]).
-    */
-  private[graft] def persistIvfPqMeta(spark: SparkSession, tableBase: String,
-                                      meta: IvfPqMeta): Unit =
-    writeIvfPqMeta(spark, tableBase, meta.metaPath, meta.nDocs,
-      meta.nCents, meta.m, meta.kCodes, meta.nBuckets)
 
   /** One full vector-ingest cycle — probe, spool the top-k verdicts,
     * absorb — the st14 per-micro-batch loop body and the a10 twin of
@@ -897,32 +882,33 @@ object Similarity {
     * arrivals see it. The spool append MATERIALIZES the probe before
     * the absorb appends the batch (probing after would let the lazily-
     * listed code scan see the batch's own rows — the same ordering
-    * contract as the minhash/semantic cycles). `cachedMeta` skips the
-    * per-batch meta read; safe whenever this loop is the index's only
-    * writer.
+    * contract as the minhash/semantic cycles). `meta` is the loop's
+    * threaded index meta and `quantizers` its one [[localTable]]
+    * snapshot of the frozen (cents, cb) tables (see
+    * [[Dedup.probeAbsorbMinhashBatch]] for the only-writer contract).
+    * The loop's redelivery guard has already dropped landed ids — it
+    * must, since a replay may not re-probe either — and its guarded
+    * batch is the arrival file itself, so the batch is neither guarded
+    * nor checkpointed again here.
     */
   def probeAbsorbIvfPqBatch(spark: SparkSession, newEmbs: DataFrame,
                             idCol: String, vecCol: String, tableBase: String,
                             k: Int, nProbe: Int, verdictsDir: String,
-                            cachedMeta: Option[IvfPqMeta] = None,
-                            preMaterialized: Boolean = false,
-                            callerGuarded: Boolean = false,
-                            deferMeta: Boolean = false,
-                            cachedQuantizers: Option[(DataFrame, DataFrame)] = None): IvfPqMeta = {
-    val meta = cachedMeta.getOrElse(readIvfPqMeta(spark, tableBase))
+                            meta: IvfPqMeta,
+                            quantizers: (DataFrame, DataFrame)): IvfPqMeta = {
     // no repartition(1): the top-k window is the plan's last exchange
     // and AQE coalescing collapses its batch-sized output — the explicit
     // single-file exchange was one more AQE stage job per micro-batch
     Dedup.withDesc(spark, "cycle: verdict spool") {
-      ivfPqProbe(spark, newEmbs, idCol, vecCol, tableBase, k, nProbe,
-          cachedMeta = Some(meta), cachedQuantizers = cachedQuantizers)
+      ivfPqProbeWith(spark, newEmbs, idCol, vecCol, tableBase, k, nProbe,
+          meta, quantizers)
         .select(col("query_id").as("vec_id"), col("neighbor_id"),
           col("adc_fp"), col("rank"))
         .write.mode(SaveMode.Append).parquet(verdictsDir)
     }
-    absorbIvfPqBatch(spark, newEmbs, idCol, vecCol, tableBase, Some(meta),
-      preMaterialized = preMaterialized, callerGuarded = callerGuarded,
-      deferMeta = deferMeta, cachedQuantizers = cachedQuantizers)
+    absorbIvfPqCore(spark,
+      newEmbs.select(col(idCol).as("id"), col(vecCol).as("v")),
+      tableBase, meta, quantizers)
   }
 
   /** Compact a landed [[landIvfPqIndex]]'s code table back to one file
@@ -933,17 +919,9 @@ object Similarity {
     * re-quantizes. Probe results are bit-identical before and after
     * (spec-pinned); Metrics `a10.compact` reports files before/after.
     */
-  def compactIvfPqIndex(spark: SparkSession, tableBase: String): Unit = {
-    val meta = readIvfPqMeta(spark, tableBase)
-    val (before, after) = Dedup.compactBucketedTable(spark,
-      s"${tableBase}_codes", "cid", meta.nBuckets)
+  def compactIvfPqIndex(spark: SparkSession, tableBase: String): Unit =
     // the _vecs side table takes the same one-new-file-per-absorb debt
-    val (vBefore, vAfter) = Dedup.compactBucketedTable(spark,
-      s"${tableBase}_vecs", "id", meta.nBuckets)
-    graft.Metrics.set("a10.compact",
-      "codes_files_before" -> before, "codes_files_after" -> after,
-      "vecs_files_before" -> vBefore, "vecs_files_after" -> vAfter)
-  }
+    Dedup.compactIndex(spark, tableBase, "a10.compact")("codes" -> "cid", "vecs" -> "id")
 
   /** Scalar-quantization ADC top-k — the int8 analog of [[pqAdcTopK]]
     * (the faiss `IndexScalarQuantizer` query path): every vector is

@@ -86,9 +86,6 @@ object BBRefParse {
     }
   }
 
-  def parsePlayer(nameId: String, html: String): Option[PlayerRow] =
-    parsePlayerE(nameId, html).toOption
-
   // --- game page ------------------------------------------------------------
   final case class TeamInfo(name: String, abbreviation: String)
   final case class GameMeta(

@@ -22,7 +22,7 @@ object DocStreams {
 
   private val qid = new AtomicInteger(0)
 
-  /** Arrival chunk count for the five ingest-loop drains (st9–st13):
+  /** Arrival chunk count for the six ingest-loop drains (st9–st14):
     * every loop splits its arrival slice into this many single-file
     * drops (id mod [[ArrivalChunks]]), each one micro-batch. THE shared
     * constant: the st11/st12/st13 oracles' arrival-order fold and the
@@ -36,26 +36,126 @@ object DocStreams {
     */
   val ArrivalChunks = 3
 
-  /** The ingest loops' compaction cadence (r16 VERDICT #5): every
-    * `every` completed absorb cycles, fire `compact` — so file counts
-    * stay bounded by the cadence without any caller-driven compaction
-    * call. 0 disables (the caller owns cadence, the pre-r17 contract).
+  /** The two corpora the drains ingest: the arrival-drop kind, the id
+    * and payload columns, and the table reader.
+    */
+  private final case class Corpus(kind: String, idCol: String, payload: String,
+                                  table: (SparkSession, String) => DataFrame)
+
+  private val Docs = Corpus("docs", "doc_id", "text", graft.sources.Tables.documents)
+  private val Embs = Corpus("embs", "vec_id", "embedding", graft.sources.Tables.embeddings)
+
+  /** One drain's landed index as [[ingestLoop]] drives it: the meta the
+    * land returned (`()` for an index without a meta table), the
+    * id-bucketed guard table's suffix and bucket count, the index's
+    * compaction and catalog table suffixes, and the per-micro-batch
+    * `cycle` — probe the guarded batch (with its batch id), spool the
+    * answers, absorb it — which returns the advanced meta.
+    */
+  private final case class Drain[M](landed: M, guard: String, guardBuckets: Int,
+                                    compact: () => Unit, tables: Seq[String])(
+                                    val cycle: (M, DataFrame, Long) => M)
+
+  /** The ingest loop behind st9–st14. Lands the `doc_id/vec_id % 5 < 3`
+    * slice of `corpus` through `land` (given the slice, the catalog
+    * table base, the index dir and the output dir), drops the remaining
+    * rows as [[ArrivalChunks]] single-file arrivals, and drains them as
+    * a file stream, `maxFilesPerTrigger = 1` so each file is one
+    * micro-batch — the landed-drop layout a real deployment tails. Each
+    * micro-batch, inside `foreachBatch`, passes the batch-proportional
+    * redelivery guard ([[Dedup.guardedBatch]], driver-resolved: in the
+    * no-replay common case the batch passes through without an
+    * anti-join, a checkpoint pass or an isEmpty job) and runs the
+    * drain's cycle on what survives. Returns the distinct output spool,
+    * which outlives the catalog tables dropped here.
     *
+    * Compaction cadence: every `autoCompactEvery` completed cycles
+    * (0 = never; the caller owns cadence) the loop fires the index's
+    * compaction, so file counts stay bounded without a caller-driven
+    * call; Metrics `<st>.autocompact` reports how often it fired.
     * Firing AFTER a completed cycle is what makes this safe inside an
     * at-least-once `foreachBatch`: the cycle's redelivery-guard key
     * (sigs/vecs/docs — always the LAST append of the cycle) is durable
     * before the compactor runs, so a replay of any pre-compaction batch
-    * is dropped by the guard anti-join and never observes the collapsed
-    * state (the st13 "at rest" contract holds batch-by-batch).
+    * is dropped by the guard and never observes the collapsed state
+    * (the st13 "at rest" contract holds batch-by-batch).
+    *
+    * The meta threads through the cycles (this loop is the index's only
+    * writer), so each micro-batch pays zero meta jobs, and the advanced
+    * meta is written once after the drain — in a finally: a mid-drain
+    * failure otherwise widened the documented one-batch n_docs crash
+    * window to the whole drain (rows absorbed, meta at its land-time
+    * value), so the loop persists whatever it reached (n_docs stays
+    * advisory either way).
     */
-  private final class AutoCompactor(every: Int, compact: () => Unit) {
-    private var absorbs = 0
-    private var fired = 0
-    def cycleDone(): Unit = {
-      absorbs += 1
-      if (every > 0 && absorbs % every == 0) { compact(); fired += 1 }
+  private def ingestLoop[M](spark: SparkSession, dir: String, st: String,
+                            corpus: Corpus, outSub: String, outSchema: StructType,
+                            autoCompactEvery: Int, rootDir: Option[String])
+                           (land: (DataFrame, String, String, String) => Drain[M])
+      : DataFrame = {
+    val id = qid.incrementAndGet()
+    val tableBase = s"graft_${st}_$id"
+    val root = rootDir.getOrElse(graft.sources.Spool.tempRoot(s"${st}_$id"))
+    val rows = corpus.table(spark, dir).select(corpus.idCol, corpus.payload)
+    val outDir = s"$root/$outSub"
+    val drain = land(rows.filter(col(corpus.idCol) % 5 < 3), tableBase,
+      s"$root/idx", outDir)
+    val arriveDir = arrivalDrops(dir, corpus.kind, corpus.idCol)(
+      rows.filter(col(corpus.idCol) % 5 >= 3))
+    val stream = spark.readStream.schema(rows.schema)
+      .option("maxFilesPerTrigger", "1").parquet(arriveDir)
+    var meta = drain.landed
+    var cycles = 0
+    val q = EventStreams.withDrainConf(spark) {
+      stream.writeStream.outputMode(OutputMode.Append())
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          Dedup.guardedBatch(spark, batch, s"${tableBase}_${drain.guard}",
+            drain.guardBuckets, s"$st.guard", corpus.idCol).foreach { fresh =>
+            meta = drain.cycle(meta, fresh, batchId)
+            cycles += 1
+            if (autoCompactEvery > 0 && cycles % autoCompactEvery == 0) drain.compact()
+          }
+        }
+        .start()
     }
-    def firedCount: Int = fired
+    try q.processAllAvailable() finally {
+      try q.stop()
+      finally meta match {
+        case m: Dedup.IndexMeta if meta != drain.landed => Dedup.writeMeta(spark, tableBase, m)
+        case _ =>
+      }
+    }
+    graft.Metrics.set(s"$st.autocompact",
+      "fired" -> (if (autoCompactEvery > 0) cycles / autoCompactEvery else 0).toLong)
+    drain.tables.foreach(s => spark.sql(s"DROP TABLE IF EXISTS ${tableBase}_$s"))
+    spark.read.schema(outSchema).parquet(outDir).distinct()
+  }
+
+  /** The d11 MinHash index the st9/st11 drains land and absorb into,
+    * with `cycle` (meta, guarded batch) as their micro-batch body.
+    */
+  private def minhashDrain(spark: SparkSession, slice: DataFrame, tableBase: String,
+                           idx: String)(cycle: (Dedup.MinhashMeta, DataFrame) =>
+                             Dedup.MinhashMeta): Drain[Dedup.MinhashMeta] = {
+    val meta = Dedup.landMinhashIndex(slice, "doc_id", "text", n = 3, k = 64,
+      bands = 16, tableBase, idx)
+    Drain(meta, "sigs", meta.nBuckets, () => Dedup.compactMinhashIndex(spark, tableBase),
+      Seq("sigs", "bands", "meta"))((m, fresh, _) => cycle(m, fresh))
+  }
+
+  /** The d13 semantic index the st10/st12 drains land and absorb into,
+    * with `cycle` (meta, guarded batch, centroid snapshot) as their
+    * micro-batch body. One driver-side snapshot of the FROZEN centroid
+    * table serves every cycle, so each assignment broadcast builds
+    * without a Spark job.
+    */
+  private def semanticDrain(spark: SparkSession, slice: DataFrame, tableBase: String,
+                            idx: String)(cycle: (Dedup.SemanticMeta, DataFrame,
+                              DataFrame) => Dedup.SemanticMeta): Drain[Dedup.SemanticMeta] = {
+    val meta = Dedup.landSemanticIndex(slice, "vec_id", "embedding", tableBase, idx)
+    val cents = Similarity.localTable(spark, s"${tableBase}_cents")
+    Drain(meta, "vecs", meta.nBuckets, () => Dedup.compactSemanticIndex(spark, tableBase),
+      Seq("cents", "assign", "vecs", "meta"))((m, fresh, _) => cycle(m, fresh, cents))
   }
 
   private val pairSchema = StructType(Seq(
@@ -89,60 +189,13 @@ object DocStreams {
     */
   def streamIncrementalDedup(spark: SparkSession, dir: String,
                              autoCompactEvery: Int = 0,
-                             rootDir: Option[String] = None): DataFrame = {
-    val id = qid.incrementAndGet()
-    val tableBase = s"graft_st9_$id"
-    val root = rootDir.getOrElse(graft.sources.Spool.tempRoot(s"st9_$id"))
-    val docs = graft.sources.Tables.documents(spark, dir)
-      .select("doc_id", "text")
-    // the land returns the meta it wrote — threaded through the cycles
-    // (this loop is the index's only writer); each micro-batch then pays
-    // one signature pass and zero meta jobs — the per-cycle meta REWRITE
-    // is deferred too (n_docs is advisory state), persisted once after
-    // the drain instead of once per batch
-    val landedMeta = Dedup.landMinhashIndex(docs.filter(col("doc_id") % 5 < 3),
-      "doc_id", "text", n = 3, k = 64, bands = 16, tableBase, s"$root/idx")
-    // arrivals: ArrivalChunks single-file drops, chunked by id
-    val arrivals = docs.filter(col("doc_id") % 5 >= 3)
-    val arriveDir = arrivalDrops(dir, "docs", "doc_id")(arrivals)
-    val outDir = s"$root/pairs"
-    val stream = spark.readStream.schema(arrivals.schema)
-      .option("maxFilesPerTrigger", "1").parquet(arriveDir)
-    var meta: Option[Dedup.MinhashMeta] = Some(landedMeta)
-    val compactor = new AutoCompactor(autoCompactEvery,
-      () => Dedup.compactMinhashIndex(spark, tableBase))
-    val q = EventStreams.withDrainConf(spark) {
-      stream.writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // redelivery guard, batch-proportional (r18 perf-weak #1): the
-          // driver-resolved guardedBatch spelling — in the no-replay
-          // common case the batch passes through without an anti-join,
-          // a checkpoint pass or an isEmpty job (r20)
-          Dedup.guardedBatch(spark, batch, s"${tableBase}_sigs",
-            meta.get.nBuckets, "st9.guard", "doc_id").foreach { fresh =>
-            meta = Some(Dedup.probeAbsorbMinhashBatch(spark, fresh, "doc_id",
-              "text", tableBase, threshold = 0.5, pairsDir = outDir,
-              cachedMeta = meta, deferMeta = true))
-            compactor.cycleDone()
-          }
-        }
-        .start()
+                             rootDir: Option[String] = None): DataFrame =
+    ingestLoop(spark, dir, "st9", Docs, "pairs", pairSchema, autoCompactEvery,
+      rootDir) { (slice, tableBase, idx, out) =>
+      minhashDrain(spark, slice, tableBase, idx)((meta, fresh) =>
+        Dedup.probeAbsorbMinhashBatch(spark, fresh, "doc_id", "text", tableBase,
+          threshold = 0.5, pairsDir = out, meta))
     }
-    // the deferred-meta persist runs in a finally: a mid-drain failure
-    // otherwise widened the documented one-batch n_docs crash window to
-    // the whole drain (rows absorbed, meta at land-time value) — persist
-    // whatever the loop reached (n_docs stays advisory either way)
-    try q.processAllAvailable() finally {
-      try q.stop()
-      finally meta.filter(_.nDocs != landedMeta.nDocs)
-        .foreach(m => Dedup.persistMinhashMeta(spark, tableBase, m))
-    }
-    graft.Metrics.set("st9.autocompact", "fired" -> compactor.firedCount.toLong)
-    // the spool outlives the catalog entries; the result plan reads only it
-    Seq("sigs", "bands", "meta").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS ${tableBase}_$s"))
-    spark.read.schema(pairSchema).parquet(outDir).distinct()
-  }
 
   private val cosPairSchema = StructType(Seq(
     StructField("id_a", LongType), StructField("id_b", LongType),
@@ -168,51 +221,13 @@ object DocStreams {
   def streamSemanticDedup(spark: SparkSession, dir: String,
                           threshold: Double = 0.4,
                           autoCompactEvery: Int = 0,
-                          rootDir: Option[String] = None): DataFrame = {
-    val id = qid.incrementAndGet()
-    val tableBase = s"graft_st10_$id"
-    val root = rootDir.getOrElse(graft.sources.Spool.tempRoot(s"st10_$id"))
-    val embs = graft.sources.Tables.embeddings(spark, dir)
-      .select("vec_id", "embedding")
-    val landedMeta = Dedup.landSemanticIndex(embs.filter(col("vec_id") % 5 < 3),
-      "vec_id", "embedding", tableBase, s"$root/idx")
-    // one driver-side snapshot of the FROZEN centroid table: every
-    // cycle's assignment broadcast then builds without a Spark job
-    val cents = Some(Similarity.localTable(spark, s"${tableBase}_cents"))
-    val arrivals = embs.filter(col("vec_id") % 5 >= 3)
-    val arriveDir = arrivalDrops(dir, "embs", "vec_id")(arrivals)
-    val outDir = s"$root/pairs"
-    val stream = spark.readStream.schema(arrivals.schema)
-      .option("maxFilesPerTrigger", "1").parquet(arriveDir)
-    var meta: Option[Dedup.SemanticMeta] = Some(landedMeta)
-    val compactor = new AutoCompactor(autoCompactEvery,
-      () => Dedup.compactSemanticIndex(spark, tableBase))
-    val q = EventStreams.withDrainConf(spark) {
-      stream.writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // batch-proportional guard, driver-resolved (see st9)
-          Dedup.guardedBatch(spark, batch, s"${tableBase}_vecs",
-            meta.get.nBuckets, "st10.guard", "vec_id").foreach { fresh =>
-            meta = Some(Dedup.probeAbsorbSemanticBatch(spark, fresh, "vec_id",
-              "embedding", tableBase, threshold, pairsDir = outDir,
-              cachedMeta = meta, preMaterialized = true, deferMeta = true,
-              cachedCents = cents))
-            compactor.cycleDone()
-          }
-        }
-        .start()
+                          rootDir: Option[String] = None): DataFrame =
+    ingestLoop(spark, dir, "st10", Embs, "pairs", cosPairSchema, autoCompactEvery,
+      rootDir) { (slice, tableBase, idx, out) =>
+      semanticDrain(spark, slice, tableBase, idx)((meta, fresh, cents) =>
+        Dedup.probeAbsorbSemanticBatch(spark, fresh, "vec_id", "embedding",
+          tableBase, threshold, pairsDir = out, meta, cents))
     }
-    // persist-in-finally: see streamIncrementalDedup
-    try q.processAllAvailable() finally {
-      try q.stop()
-      finally meta.filter(_.nDocs != landedMeta.nDocs)
-        .foreach(m => Dedup.persistSemanticMeta(spark, tableBase, m))
-    }
-    graft.Metrics.set("st10.autocompact", "fired" -> compactor.firedCount.toLong)
-    Seq("cents", "assign", "vecs", "meta").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS ${tableBase}_$s"))
-    spark.read.schema(cosPairSchema).parquet(outDir).distinct()
-  }
 
   /** JVM-global arrival-drop cache: the chunked drop files are a pure
     * function of (table dir, family kind, the shared chunk rule) and
@@ -281,50 +296,13 @@ object DocStreams {
     */
   def streamIncrementalSurvivors(spark: SparkSession, dir: String,
                                  autoCompactEvery: Int = 0,
-                                 rootDir: Option[String] = None): DataFrame = {
-    val id = qid.incrementAndGet()
-    val tableBase = s"graft_st11_$id"
-    val root = rootDir.getOrElse(graft.sources.Spool.tempRoot(s"st11_$id"))
-    val docs = graft.sources.Tables.documents(spark, dir)
-      .select("doc_id", "text")
-    val landedMeta = Dedup.landMinhashIndex(docs.filter(col("doc_id") % 5 < 3),
-      "doc_id", "text", n = 3, k = 64, bands = 16, tableBase, s"$root/idx")
-    val arriveDir = arrivalDrops(dir, "docs", "doc_id")(
-      docs.filter(col("doc_id") % 5 >= 3))
-    val outDir = s"$root/class"
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(arriveDir)
-    var meta: Option[Dedup.MinhashMeta] = Some(landedMeta)
-    val compactor = new AutoCompactor(autoCompactEvery,
-      () => Dedup.compactMinhashIndex(spark, tableBase))
-    val q = EventStreams.withDrainConf(spark) {
-      stream.writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // batch-proportional guard, driver-resolved (see st9)
-          Dedup.guardedBatch(spark, batch, s"${tableBase}_sigs",
-            meta.get.nBuckets, "st11.guard", "doc_id").foreach { fresh =>
-            meta = Some(Dedup.classifyAbsorbMinhashBatch(spark, fresh, "doc_id",
-              "text", tableBase, threshold = 0.5, classDir = outDir,
-              cachedMeta = meta, deferMeta = true))
-            compactor.cycleDone()
-          }
-        }
-        .start()
+                                 rootDir: Option[String] = None): DataFrame =
+    ingestLoop(spark, dir, "st11", Docs, "class", classSchema("doc_id"),
+      autoCompactEvery, rootDir) { (slice, tableBase, idx, out) =>
+      minhashDrain(spark, slice, tableBase, idx)((meta, fresh) =>
+        Dedup.classifyAbsorbMinhashBatch(spark, fresh, "doc_id", "text", tableBase,
+          threshold = 0.5, classDir = out, meta))
     }
-    // the deferred-meta persist runs in a finally: a mid-drain failure
-    // otherwise widened the documented one-batch n_docs crash window to
-    // the whole drain (rows absorbed, meta at land-time value) — persist
-    // whatever the loop reached (n_docs stays advisory either way)
-    try q.processAllAvailable() finally {
-      try q.stop()
-      finally meta.filter(_.nDocs != landedMeta.nDocs)
-        .foreach(m => Dedup.persistMinhashMeta(spark, tableBase, m))
-    }
-    graft.Metrics.set("st11.autocompact", "fired" -> compactor.firedCount.toLong)
-    Seq("sigs", "bands", "meta").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS ${tableBase}_$s"))
-    spark.read.schema(classSchema("doc_id")).parquet(outDir).distinct()
-  }
 
   private val cleanSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("clean_text", StringType),
@@ -351,48 +329,18 @@ object DocStreams {
   def streamLineDedup(spark: SparkSession, dir: String,
                       window: Int = 10, minDf: Int = 2,
                       autoCompactEvery: Int = 0,
-                      rootDir: Option[String] = None): DataFrame = {
-    val id = qid.incrementAndGet()
-    val tableBase = s"graft_st13_$id"
-    val root = rootDir.getOrElse(graft.sources.Spool.tempRoot(s"st13_$id"))
-    val docs = graft.sources.Tables.documents(spark, dir)
-      .select("doc_id", "text")
-    // segdf has no meta table; one val keeps land, guard and the
-    // absorbs' bucket count from drifting apart
-    val segBuckets = 8
-    Dedup.landSegDfIndex(spark, docs.filter(col("doc_id") % 5 < 3),
-      "doc_id", "text", window, tableBase, s"$root/idx", nBuckets = segBuckets)
-    val arriveDir = arrivalDrops(dir, "docs", "doc_id")(
-      docs.filter(col("doc_id") % 5 >= 3))
-    val outDir = s"$root/clean"
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(arriveDir)
-    // safe mid-stream despite compactSegDfIndex's at-rest contract: the
-    // compactor only ever runs AFTER classifyAbsorbSegBatch committed
-    // the `_docs` guard key, so a replay of any pre-compaction batch is
-    // dropped by the guard anti-join and never re-reads the collapsed
-    // deltas as prior state
-    val compactor = new AutoCompactor(autoCompactEvery,
-      () => Dedup.compactSegDfIndex(spark, tableBase))
-    val q = EventStreams.withDrainConf(spark) {
-      stream.writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // batch-proportional guard, driver-resolved (see st9)
-          Dedup.guardedBatch(spark, batch, s"${tableBase}_docs",
-            segBuckets, "st13.guard", "doc_id").foreach { fresh =>
-            Dedup.classifyAbsorbSegBatch(spark, fresh, "doc_id", "text",
-              tableBase, batchId, window, minDf, outDir)
-            compactor.cycleDone()
-          }
-        }
-        .start()
+                      rootDir: Option[String] = None): DataFrame =
+    ingestLoop(spark, dir, "st13", Docs, "clean", cleanSchema, autoCompactEvery,
+      rootDir) { (slice, tableBase, idx, out) =>
+      Dedup.landSegDfIndex(spark, slice, "doc_id", "text", window, tableBase, idx)
+      // safe mid-stream despite compactSegDfIndex's at-rest contract: the
+      // loop compacts only AFTER classifyAbsorbSegBatch committed the
+      // `_docs` guard key (see ingestLoop)
+      Drain((), "docs", Dedup.SegBuckets, () => Dedup.compactSegDfIndex(spark, tableBase),
+        Seq("segdf", "docs"))((_, fresh, batchId) =>
+        Dedup.classifyAbsorbSegBatch(spark, fresh, "doc_id", "text", tableBase,
+          batchId, window, minDf, out))
     }
-    try q.processAllAvailable() finally q.stop()
-    graft.Metrics.set("st13.autocompact", "fired" -> compactor.firedCount.toLong)
-    Seq("segdf", "docs").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS ${tableBase}_$s"))
-    spark.read.schema(cleanSchema).parquet(outDir).distinct()
-  }
 
   /** st12: streaming semantic ingest classification — the embedding
     * twin of [[streamIncrementalSurvivors]] (st12 : st10 :: st11 :
@@ -407,50 +355,13 @@ object DocStreams {
   def streamSemanticSurvivors(spark: SparkSession, dir: String,
                               threshold: Double = 0.4,
                               autoCompactEvery: Int = 0,
-                              rootDir: Option[String] = None): DataFrame = {
-    val id = qid.incrementAndGet()
-    val tableBase = s"graft_st12_$id"
-    val root = rootDir.getOrElse(graft.sources.Spool.tempRoot(s"st12_$id"))
-    val embs = graft.sources.Tables.embeddings(spark, dir)
-      .select("vec_id", "embedding")
-    val landedMeta = Dedup.landSemanticIndex(embs.filter(col("vec_id") % 5 < 3),
-      "vec_id", "embedding", tableBase, s"$root/idx")
-    // frozen-centroid snapshot: see streamSemanticDedup
-    val cents = Some(Similarity.localTable(spark, s"${tableBase}_cents"))
-    val arriveDir = arrivalDrops(dir, "embs", "vec_id")(
-      embs.filter(col("vec_id") % 5 >= 3))
-    val outDir = s"$root/class"
-    val stream = spark.readStream.schema(embs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(arriveDir)
-    var meta: Option[Dedup.SemanticMeta] = Some(landedMeta)
-    val compactor = new AutoCompactor(autoCompactEvery,
-      () => Dedup.compactSemanticIndex(spark, tableBase))
-    val q = EventStreams.withDrainConf(spark) {
-      stream.writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // batch-proportional guard, driver-resolved (see st9)
-          Dedup.guardedBatch(spark, batch, s"${tableBase}_vecs",
-            meta.get.nBuckets, "st12.guard", "vec_id").foreach { fresh =>
-            meta = Some(Dedup.classifyAbsorbSemanticBatch(spark, fresh, "vec_id",
-              "embedding", tableBase, threshold, classDir = outDir,
-              cachedMeta = meta, preMaterialized = true, deferMeta = true,
-              cachedCents = cents))
-            compactor.cycleDone()
-          }
-        }
-        .start()
+                              rootDir: Option[String] = None): DataFrame =
+    ingestLoop(spark, dir, "st12", Embs, "class", classSchema("vec_id"),
+      autoCompactEvery, rootDir) { (slice, tableBase, idx, out) =>
+      semanticDrain(spark, slice, tableBase, idx)((meta, fresh, cents) =>
+        Dedup.classifyAbsorbSemanticBatch(spark, fresh, "vec_id", "embedding",
+          tableBase, threshold, classDir = out, meta, cents))
     }
-    // persist-in-finally: see streamIncrementalDedup
-    try q.processAllAvailable() finally {
-      try q.stop()
-      finally meta.filter(_.nDocs != landedMeta.nDocs)
-        .foreach(m => Dedup.persistSemanticMeta(spark, tableBase, m))
-    }
-    graft.Metrics.set("st12.autocompact", "fired" -> compactor.firedCount.toLong)
-    Seq("cents", "assign", "vecs", "meta").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS ${tableBase}_$s"))
-    spark.read.schema(classSchema("vec_id")).parquet(outDir).distinct()
-  }
 
   private val verdictSchema = StructType(Seq(
     StructField("vec_id", LongType), StructField("neighbor_id", LongType),
@@ -476,64 +387,29 @@ object DocStreams {
   def streamIvfPqIngest(spark: SparkSession, dir: String,
                         k: Int = 5, nProbe: Int = 4,
                         autoCompactEvery: Int = 0,
-                        rootDir: Option[String] = None): DataFrame = {
-    val id = qid.incrementAndGet()
-    val tableBase = s"graft_st14_$id"
-    val root = rootDir.getOrElse(graft.sources.Spool.tempRoot(s"st14_$id"))
-    val embs = graft.sources.Tables.embeddings(spark, dir)
-      .select("vec_id", "embedding")
-    val landed = embs.filter(col("vec_id") % 5 < 3)
-    // cell count sized by the LANDED corpus (ivfCellsFor, the d13/d10
-    // rule): a fixed nCentroids makes every probe scan nProbe/nCents of
-    // the corpus PER QUERY — at gen10 that was 30k candidates for each
-    // of 27k arrivals in a batch, the exact blow-up class the sqrt
-    // sizing exists to stop (r18; the oracle replays the same formula).
-    // The sized land derives the count from its own `_vecs` write, so
-    // the old separate landed.count() corpus pass is gone (r19)
-    val landedMeta = Similarity.landIvfPqIndexSized(landed, "vec_id",
-      "embedding", Dedup.ivfCellsFor, m = 4, kCodes = 16, tableBase,
-      s"$root/idx")
-    // one driver-side snapshot of the FROZEN quantizer tables (cents,
-    // cb): every cycle's probe/encode broadcasts then build job-free
-    val quant = Some((Similarity.localTable(spark, s"${tableBase}_cents"),
-      Similarity.localTable(spark, s"${tableBase}_cb")))
-    val arriveDir = arrivalDrops(dir, "embs", "vec_id")(
-      embs.filter(col("vec_id") % 5 >= 3))
-    val outDir = s"$root/verdicts"
-    val stream = spark.readStream.schema(embs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(arriveDir)
-    var meta: Option[Similarity.IvfPqMeta] = Some(landedMeta)
-    val compactor = new AutoCompactor(autoCompactEvery,
-      () => Similarity.compactIvfPqIndex(spark, tableBase))
-    val q = EventStreams.withDrainConf(spark) {
-      stream.writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // batch-proportional guard on the id-bucketed _vecs side
-          // table — id-keyed, so a replay with a CHANGED vector is
-          // dropped like any other (the codes-side sub-0 guard this
-          // replaced was corpus-proportional and blind to those);
-          // driver-resolved guardedBatch spelling (see st9)
-          Dedup.guardedBatch(spark, batch, s"${tableBase}_vecs",
-            meta.get.nBuckets, "st14.guard", "vec_id").foreach { fresh =>
-            meta = Some(Similarity.probeAbsorbIvfPqBatch(spark, fresh,
-              "vec_id", "embedding", tableBase, k, nProbe,
-              verdictsDir = outDir, cachedMeta = meta,
-              preMaterialized = true, callerGuarded = true,
-              deferMeta = true, cachedQuantizers = quant))
-            compactor.cycleDone()
-          }
-        }
-        .start()
+                        rootDir: Option[String] = None): DataFrame =
+    ingestLoop(spark, dir, "st14", Embs, "verdicts", verdictSchema, autoCompactEvery,
+      rootDir) { (slice, tableBase, idx, out) =>
+      // cell count sized by the LANDED corpus (ivfCellsFor, the d13/d10
+      // rule): a fixed nCentroids makes every probe scan nProbe/nCents of
+      // the corpus PER QUERY — at gen10 that was 30k candidates for each
+      // of 27k arrivals in a batch, the exact blow-up class the sqrt
+      // sizing exists to stop (r18; the oracle replays the same formula).
+      // The sized land derives the count from its own `_vecs` write, so
+      // no separate landed.count() corpus pass is needed (r19)
+      val meta = Similarity.landIvfPqIndexSized(slice, "vec_id", "embedding",
+        Dedup.ivfCellsFor, m = 4, kCodes = 16, tableBase, idx)
+      // one driver-side snapshot of the FROZEN quantizer tables (cents,
+      // cb): every cycle's probe/encode broadcasts then build job-free
+      val quant = (Similarity.localTable(spark, s"${tableBase}_cents"),
+        Similarity.localTable(spark, s"${tableBase}_cb"))
+      // guard on the id-bucketed _vecs side table — id-keyed, so a
+      // replay with a CHANGED vector is dropped like any other (the
+      // codes-side sub-0 guard this replaced was corpus-proportional and
+      // blind to those)
+      Drain(meta, "vecs", meta.nBuckets, () => Similarity.compactIvfPqIndex(spark, tableBase),
+        Seq("cents", "cb", "codes", "vecs", "meta"))((m, fresh, _) =>
+        Similarity.probeAbsorbIvfPqBatch(spark, fresh, "vec_id", "embedding",
+          tableBase, k, nProbe, verdictsDir = out, m, quant))
     }
-    // persist-in-finally: see streamIncrementalDedup
-    try q.processAllAvailable() finally {
-      try q.stop()
-      finally meta.filter(_.nDocs != landedMeta.nDocs)
-        .foreach(m => Similarity.persistIvfPqMeta(spark, tableBase, m))
-    }
-    graft.Metrics.set("st14.autocompact", "fired" -> compactor.firedCount.toLong)
-    Seq("cents", "cb", "codes", "vecs", "meta").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS ${tableBase}_$s"))
-    spark.read.schema(verdictSchema).parquet(outDir).distinct()
-  }
 }

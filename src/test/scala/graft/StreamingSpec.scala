@@ -522,13 +522,62 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  /** Each ingest drain's labelled Spark job count as measured at commit
+    * 93fb2f0 (sf0.001, this spec's local[4] session): the jobs its
+    * micro-batches label `cycle: …` or `<st>.guard: …`. A drain may run
+    * fewer, never more — the per-micro-batch job floor is the drains'
+    * dominant cost.
+    */
+  private val DrainJobCeilings = Map(
+    "st9" -> 36, "st9 auto-compacted" -> 36, "st10" -> 42, "st11" -> 48,
+    "st12" -> 57, "st13" -> 48, "st13 auto-compacted" -> 48, "st14" -> 45)
+
+  /** Run `drain` (one DocStreams call, which drains its stream before
+    * returning) with one listener counting the jobs labelled `cycle: …`
+    * or `<st>.guard: …`, and assert the count stays within
+    * [[DrainJobCeilings]]. A fence job after the drain flushes the
+    * asynchronous listener bus, so every drain job is counted.
+    */
+  private def withDrainJobCheck[T](st: String, variant: String = "")(drain: => T): T = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val fence = s"drain job fence ${System.nanoTime()}"
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val d = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        if (d.startsWith("cycle: ") || d.startsWith(s"$st.guard: ")) jobs.incrementAndGet()
+        else if (d == fence) fenced.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    val out = try {
+      val r = drain
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(fence)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(prev)
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus never delivered the fence job")
+      r
+    } finally sc.removeSparkListener(listener)
+    val key = if (variant.isEmpty) st else s"$st $variant"
+    val ceiling = DrainJobCeilings(key)
+    info(s"$key drain: ${jobs.get} labelled jobs (ceiling $ceiling)")
+    assert(jobs.get <= ceiling,
+      s"$key drain ran ${jobs.get} labelled jobs, more than the $ceiling measured at 93fb2f0")
+    out
+  }
+
   test("st9: streamed probe+absorb union equals the batch recompute on arrival pairs") {
     // the continuous-ingest contract: pairs drained across all
     // micro-batches = the d3 algebra over ALL documents restricted to
     // arrival-involving pairs — including pairs whose two members arrive
     // in DIFFERENT micro-batches, the leg only the absorb path (and its
     // post-append table refresh) can produce
-    val got = graft.streaming.DocStreams.streamIncrementalDedup(spark, sfDir)
+    val got = withDrainJobCheck("st9")(
+        graft.streaming.DocStreams.streamIncrementalDedup(spark, sfDir))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val want = graft.operators.Dedup.minhashLshPairs(docs, "doc_id", "text",
@@ -561,8 +610,9 @@ class StreamingSpec extends SparkSpec {
     // bucket, and the drained pair set still equals the batch recompute
     // bit-for-bit
     val root9 = graft.sources.Spool.tempRoot("st9_auto")
-    val got9 = graft.streaming.DocStreams.streamIncrementalDedup(spark, sfDir,
-        autoCompactEvery = 1, rootDir = Some(root9))
+    val got9 = withDrainJobCheck("st9", "auto-compacted")(
+        graft.streaming.DocStreams.streamIncrementalDedup(spark, sfDir,
+          autoCompactEvery = 1, rootDir = Some(root9)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(Metrics.scalar("st9.autocompact", "fired").contains(C.toLong))
     // last cycle compacted: sigs + bands are each ≤ one file per bucket
@@ -580,13 +630,15 @@ class StreamingSpec extends SparkSpec {
     // compactSegDfIndex collapses delta history mid-stream and the
     // drained verdicts equal a plain (never-compacted) drain
     val root13 = graft.sources.Spool.tempRoot("st13_auto")
-    val got13 = graft.streaming.DocStreams.streamLineDedup(spark, sfDir,
-        autoCompactEvery = 1, rootDir = Some(root13))
+    val got13 = withDrainJobCheck("st13", "auto-compacted")(
+        graft.streaming.DocStreams.streamLineDedup(spark, sfDir,
+          autoCompactEvery = 1, rootDir = Some(root13)))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(Metrics.scalar("st13.autocompact", "fired").contains(C.toLong))
     assert(parquetFiles(s"$root13/idx") <= 17L, // 8 segdf + 8 docs + margin
       s"auto-compacted segdf index still carries small files: ${parquetFiles(s"$root13/idx")}")
-    val plain13 = graft.streaming.DocStreams.streamLineDedup(spark, sfDir)
+    val plain13 = withDrainJobCheck("st13")(
+        graft.streaming.DocStreams.streamLineDedup(spark, sfDir))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(got13 == plain13,
       s"only-auto=${(got13 -- plain13).take(2)} only-plain=${(plain13 -- got13).take(2)}")
@@ -602,8 +654,9 @@ class StreamingSpec extends SparkSpec {
     // roundtrips doubles exactly, so the recompute is bit-identical).
     // τ = 0.2, not the key's 0.4: the spec corpus is smaller and the
     // looser τ keeps the cross-batch leg non-vacuous.
-    val got = graft.streaming.DocStreams.streamSemanticDedup(spark, sfDir,
-        threshold = 0.2)
+    val got = withDrainJobCheck("st10")(
+        graft.streaming.DocStreams.streamSemanticDedup(spark, sfDir,
+          threshold = 0.2))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val embs = graft.sources.Tables.embeddings(spark, sfDir)
     val corpus = embs.filter(col("vec_id") % 5 < 3)
@@ -663,8 +716,8 @@ class StreamingSpec extends SparkSpec {
     // chunks), so the drained stream must equal a single fold over the
     // full d3 pair algebra under earlier = landed ∨ earlier-chunk ∨
     // smaller-id chunk mate
-    val got = classRows(
-      graft.streaming.DocStreams.streamIncrementalSurvivors(spark, sfDir))
+    val got = classRows(withDrainJobCheck("st11")(
+      graft.streaming.DocStreams.streamIncrementalSurvivors(spark, sfDir)))
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val pairs = graft.operators.Dedup.minhashLshPairs(docs, "doc_id", "text",
       n = 3, k = 64, bands = 16, threshold = 0.5)
@@ -680,9 +733,9 @@ class StreamingSpec extends SparkSpec {
     // landed vec_id % 5 < 3 slice, recomputed bit-identically as in the
     // st10 spec), folded under the same earlier rule; τ = 0.2 keeps all
     // three neighbor kinds non-vacuous at spec scale
-    val got = classRows(
+    val got = classRows(withDrainJobCheck("st12")(
       graft.streaming.DocStreams.streamSemanticSurvivors(spark, sfDir,
-        threshold = 0.2))
+        threshold = 0.2)))
     val embs = graft.sources.Tables.embeddings(spark, sfDir)
     val corpus = embs.filter(col("vec_id") % 5 < 3)
     val cents = graft.operators.Similarity.md5Sample(corpus, "vec_id", "embedding",
@@ -703,7 +756,8 @@ class StreamingSpec extends SparkSpec {
     // stream must equal a scalar keep-first fold over the full segment
     // algebra under earlier = landed ∨ earlier-chunk ∨ smaller-id
     // chunk mate — with all three earlier-host kinds exercised
-    val got = graft.streaming.DocStreams.streamLineDedup(spark, sfDir)
+    val got = withDrainJobCheck("st13")(
+        graft.streaming.DocStreams.streamLineDedup(spark, sfDir))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select("doc_id", "text").collect()
@@ -751,7 +805,8 @@ class StreamingSpec extends SparkSpec {
     // the verdict spool all at once
     def vr(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-    val got = graft.streaming.DocStreams.streamIvfPqIngest(spark, sfDir)
+    val got = withDrainJobCheck("st14")(
+        graft.streaming.DocStreams.streamIvfPqIngest(spark, sfDir))
       .collect().map(vr).toSet
     val Sim = graft.operators.Similarity
     val embs = graft.sources.Tables.embeddings(spark, sfDir)
